@@ -179,11 +179,16 @@ def sequence_pack(
         raise ValueError("context_len must be positive")
     from pyspark.sql import Window
 
+    # localCheckpoint (not a lazy frame, not persist): the base offsets are
+    # keyed by __pid, so the partition assignment must be computed exactly
+    # once. Re-planned, AQE may coalesce the range partitions differently;
+    # a persisted block evicted before the output runs would be recomputed.
     d = (
         df.select(F.col(id_col), F.col(tokens_col))
         .repartitionByRange(F.col(id_col))
         .sortWithinPartitions(id_col)
         .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     part = (
         d.groupBy("__pid")
@@ -198,6 +203,7 @@ def sequence_pack(
         [(p, b) for p, b in base.items()], "__pid int, __base long"
     )
     w = Window.partitionBy("__pid").orderBy(id_col)
+    tok = "`" + tokens_col.replace("`", "``") + "`"
     out = (
         d.join(F.broadcast(base_df), "__pid")
         .withColumn(
@@ -220,10 +226,7 @@ def sequence_pack(
             "pack_last",
             F.when(
                 F.col(tokens_col) > 0,
-                F.expr(
-                    f"(token_offset + {tokens_col} - 1)"
-                    f" div {int(context_len)}"
-                ),
+                F.expr(f"(token_offset + {tok} - 1) div {int(context_len)}"),
             ).otherwise(F.col("pack_first")),
         )
         .drop("__pid", "__base")

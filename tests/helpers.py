@@ -2,6 +2,25 @@
 
 from __future__ import annotations
 
+import contextlib
+
+
+@contextlib.contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Set SQL confs on the shared test session for one block, then put
+    the previous values back (or unset the ones that had none)."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 class MockGroupState:
     """Minimal stand-in for pyspark GroupState, driving the stateful

@@ -3,10 +3,13 @@
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
 from core_spark.operators import sampling as smp
+from helpers import session_conf
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -174,30 +177,39 @@ def test_semantic_dedup_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_sequence_pack_prefix_sums(spark):
+@pytest.mark.parametrize("tokens_col", ["n_tokens", "n tokens"])
+def test_sequence_pack_prefix_sums(spark, tokens_col):
     import pandas as pd
 
     from core_spark.operators import sampling as sp
 
     pdf = pd.DataFrame(
-        {"doc_id": range(100), "n_tokens": [(i * 37) % 900 for i in range(100)]}
+        {"doc_id": range(100), tokens_col: [(i * 37) % 900 for i in range(100)]}
     )
     # expected: plain prefix sum in doc_id order
-    exp_off = pdf["n_tokens"].cumsum().shift(1, fill_value=0).tolist()
-    for parts in (1, 7):
-        df = spark.createDataFrame(pdf).repartition(parts)
-        out = (
-            sp.sequence_pack(df, "doc_id", "n_tokens", 512)
-            .orderBy("doc_id")
-            .collect()
-        )
-        assert [r["token_offset"] for r in out] == exp_off, parts
+    exp_off = pdf[tokens_col].cumsum().shift(1, fill_value=0).tolist()
+    # the offsets must not depend on the physical layout: input partitions,
+    # shuffle partitions, or AQE coalescing the range partitions
+    for parts, shuffle in itertools.product((1, 7), (1, 13)):
+        conf = {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+            "spark.sql.shuffle.partitions": str(shuffle),
+        }
+        with session_conf(spark, conf):
+            df = spark.createDataFrame(pdf).repartition(parts)
+            out = (
+                sp.sequence_pack(df, "doc_id", tokens_col, 512)
+                .orderBy("doc_id")
+                .collect()
+            )
+        assert [r["token_offset"] for r in out] == exp_off, (parts, shuffle)
         for r in out:
             assert r["pack_first"] == r["token_offset"] // 512
-            if r["n_tokens"] > 0:
+            if r[tokens_col] > 0:
                 assert (
                     r["pack_last"]
-                    == (r["token_offset"] + r["n_tokens"] - 1) // 512
+                    == (r["token_offset"] + r[tokens_col] - 1) // 512
                 )
             else:
                 # zero-token docs sit at a boundary without claiming a pack
